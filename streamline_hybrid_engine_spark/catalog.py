@@ -37,17 +37,20 @@ TABLES = (
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    """events.parquet carries TIMESTAMP(NANOS) (FIXTURES.md ⚠).
+    """events.parquet's ``ts`` normalized to a session TimestampType
+    (FIXTURES.md ⚠).
 
-    Three reader behaviors exist across Spark 4.x builds, all handled:
-    with ``spark.sql.legacy.parquet.nanosAsLong=true`` honored the column
+    The fixtures carry TIMESTAMP(MICROS) with ``isAdjustedToUTC=false``,
+    which Spark reads as TIMESTAMP_NTZ — cast to the session-timezone
+    TimestampType (exact under the pinned UTC session) so the engine's
+    schema contract is stable. A file written as TIMESTAMP(NANOS) reads
+    one of two ways across Spark 4.x builds, both handled: with
+    ``spark.sql.legacy.parquet.nanosAsLong=true`` honored the column
     arrives as LongType nanos — truncate to micros (exact; the oracle
-    compares at micro precision) and rebuild a timestamp; newer builds read
-    nanos natively as TIMESTAMP_NTZ truncated to micros — cast to the
-    session-timezone TimestampType (exact under the pinned UTC session) so
-    the engine's schema contract is stable across builds; a build that
-    refuses the file entirely falls back to an arrow round-trip via pyarrow
-    (small table; fallback only).
+    compares at micro precision) and rebuild a timestamp; newer builds
+    read nanos natively as TIMESTAMP_NTZ truncated to micros — the same
+    cast as above. A build that refuses the file entirely falls back to
+    an arrow round-trip via pyarrow (small table; fallback only).
     """
     try:
         df = spark.read.parquet(path)

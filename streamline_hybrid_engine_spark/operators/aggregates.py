@@ -2444,23 +2444,26 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     against PRECOMPUTED integer thresholds round(PoissonCDF(k)·2^48).
     No rand(), no runtime exp(), the same resamples on every engine,
     partitioning and run (the llm_train_split_hash argument, applied
-    to statistics) — and hashing cost is per ROW, not per (row, b):
-    the first cut md5'd every (row, b) pair and read 47.6 s at sf0.1;
-    the seeded stream pays B integer mul-add-mask ops per row instead
-    (re-measured below). Independence story: ACROSS rows the streams
-    are independent md5 seeds (that is where bootstrap exchangeability
-    lives); within a row the B drawn weights ride an odd-stride
-    arithmetic progression mod 2^48 — equidistributed, and each lands
-    in a different resample. Resample means are exact floored micros
-    over exact
-    integer cents; the CI bounds are the rank-5 and rank-196 order
-    statistics of the {BOOT_B} means (exact integer ranks — B chosen
-    so 2.5%/97.5% need no interpolation), tie-broken by resample id.
-    Plan: one fact scan crossed with a broadcast {BOOT_B}-row resample
-    table, ONE map-side-combined groupBy to |groups|×{BOOT_B} cells,
-    then windows over metadata-sized tables; the fact is never
-    shuffled wider than its (group, b) partial aggregate. At 100 TB
-    the B multiplier rides the scan (map-side), not the shuffle."""
+    to statistics) — and hashing cost is per ROW, not per (row, b),
+    in the compiled plan too: the B-way expansion is a Generate over
+    the constant array [0, B), whose codegen evaluates the seeds once
+    per input row before its per-element loop. (A crossJoin with a
+    broadcast B-row table did not: codegen deferred the seed
+    projection into the nested-loop join's inner loop and ran both
+    md5s once per (row, b) pair.) Independence story: ACROSS rows the
+    streams are independent md5 seeds (that is where bootstrap
+    exchangeability lives); within a row the B drawn weights ride an
+    odd-stride arithmetic progression mod 2^48 — equidistributed, and
+    each lands in a different resample. Resample means are exact
+    floored micros over exact integer cents; the CI bounds are the
+    rank-5 and rank-196 order statistics of the B = 200 means (exact
+    integer ranks — B chosen so 2.5%/97.5% need no interpolation),
+    tie-broken by resample id.
+    Plan: one fact scan whose rows each explode into B resample rows,
+    ONE map-side-combined groupBy to |groups|×B cells, then windows
+    over metadata-sized tables; the fact is never shuffled wider than
+    its (group, b) partial aggregate. At 100 TB the B multiplier rides
+    the scan (map-side), not the shuffle."""
     from pyspark.sql import Window
 
     # parallel=True: the B-way expansion multiplies per-partition work
@@ -2472,7 +2475,6 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("cents"),
         "o_orderkey",
     )
-    dec = "decimal(38,0)"
     pt = base.groupBy("grp").agg(
         F.count("*").cast("long").alias("n_rows"),
         F.expr(
@@ -2480,7 +2482,6 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div count(*) AS BIGINT)"
         ).alias("mean_micro"),
     )
-    bs = spark.range(0, BOOT_B).select(F.col("id").cast("int").alias("b"))
     seeded = base.select(
         "grp",
         "cents",
@@ -2493,7 +2494,9 @@ def agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             " cast(o_orderkey as string))), 1, 12), 16, 10) as bigint) | 1"
         ).alias("sc"),
     )
-    w = seeded.crossJoin(F.broadcast(bs)).select(
+    w = seeded.withColumn(
+        "b", F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1)))
+    ).select(
         "grp",
         "b",
         F.expr(

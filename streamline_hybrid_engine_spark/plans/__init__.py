@@ -60,3 +60,14 @@ def codegen_stage_count(df: DataFrame, execute: bool = True) -> int:
     """Whole-stage-codegen span count after execution (AQE final plan).
     Wider spans = more of the query compiled into single JVM loops."""
     return executed_plan(df, execute=execute).count("WholeStageCodegen")
+
+
+def codegen(df: DataFrame) -> str:
+    """The Java source of every whole-stage-codegen span, as Spark's
+    ``debug.codegenString`` prints it. Where a per-row expression is
+    evaluated relative to a stage's loops shows only here, not in the
+    plan text. Runs the query first: under AQE the spans exist only once
+    its stages are built."""
+    df.collect()
+    debug = df.sparkSession._jvm.org.apache.spark.sql.execution.debug.package
+    return debug.codegenString(df._jdf.queryExecution().executedPlan())

@@ -5,8 +5,10 @@ The reference (Flink 1.x) pins its runtime behavior via flink-conf.yaml
 of SQL configs chosen for correctness-vs-oracle and for 100 TB scale-out:
 
 - ANSI on (Spark 4 default): matches DuckDB/Calcite arithmetic semantics.
-- ``nanosAsLong``: the fixture ``events.parquet`` carries TIMESTAMP(NANOS),
-  which Spark 4 otherwise refuses (PARQUET_TYPE_ILLEGAL). See catalog.py.
+- ``nanosAsLong``: lets Spark 4 read an ``events.parquet`` written as
+  TIMESTAMP(NANOS), which it otherwise refuses (PARQUET_TYPE_ILLEGAL). The
+  fixtures on disk are TIMESTAMP(MICROS), not adjusted to UTC, and do not
+  need it; the loader keeps both paths. See catalog.py.
 - UTC session timezone: deterministic rendering vs the (tz-naive) oracle.
 - AQE on: runtime re-planning (skew joins, broadcast conversion) — the
   scale story replaces Flink's static cost-based optimizer choices.
@@ -79,7 +81,7 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
 
     The driver hands us ITS SparkSession; these confs are all runtime-settable
     in Spark 4 and are required for oracle parity (UTC rendering) and for
-    reading the nanos-timestamp fixture.
+    reading an events file written as TIMESTAMP(NANOS).
 
     Shuffle width is additionally pinned to the session's core count: a
     foreign session at the 200-partition default makes every STATEFUL

@@ -8,9 +8,11 @@ performance bug even when parity stays green.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
-from streamline_hybrid_engine_spark.plans import executed_plan, optimized_plan
+from streamline_hybrid_engine_spark.plans import codegen, executed_plan, optimized_plan
 from streamline_hybrid_engine_spark.registry import all_queries
 
 _QS = all_queries()
@@ -1250,12 +1252,13 @@ def test_xcorr_lag_hour_keyed_join(spark, sf_dir):
 
 
 def test_bootstrap_ci_single_fact_shuffle(spark, sf_dir):
-    """The B-way resample explode must ride the SCAN (broadcast b-table
-    crossJoin), partial-aggregate map-side into groups x B cells, and
-    never shuffle the fact wider than that one (grp, b) aggregate."""
+    """The B-way resample explode must ride the SCAN (a Generate over the
+    constant [0, B) array), partial-aggregate map-side into groups x B
+    cells, and never shuffle the fact wider than that one (grp, b)
+    aggregate."""
     p = plan(spark, sf_dir, "agg_bootstrap_ci")
     assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" in p  # the 200-row resample attach
+    assert "Generate explode" in p  # the 200-way resample expansion
     assert "partial_" in p
 
 
@@ -1295,6 +1298,61 @@ def test_bootstrap_ci_hot_aggregate_is_decimal_free(spark, sf_dir):
         if "wt" in frag:
             wt_partials.append(frag)
     assert wt_partials and all("decimal" not in f for f in wt_partials)
+
+
+def _loop_bodies(src: str, header: str) -> list[str]:
+    """Brace-matched bodies of every generated-Java loop whose header
+    matches the regex ``header``."""
+    bodies = []
+    for m in re.finditer(header, src):
+        i = j = src.index("{", m.end())
+        depth = 0
+        while True:
+            depth += {"{": 1, "}": -1}.get(src[j], 0)
+            if depth == 0:
+                break
+            j += 1
+        bodies.append(src[i : j + 1])
+    return bodies
+
+
+def _methods_reaching(src: str, needle: str) -> set[str]:
+    """Names of the methods of one generated class that evaluate
+    ``needle`` directly or through calls to its other methods."""
+    heads = list(re.finditer(r"\b(?:private|protected|public) \w+ (\w+)\(", src))
+    ends = [h.start() for h in heads[1:]] + [len(src)]
+    text = {h.group(1): src[h.end() : e] for h, e in zip(heads, ends)}
+    hit = {n for n, t in text.items() if needle in t}
+    while True:
+        more = {
+            n
+            for n, t in text.items()
+            if n not in hit and any(re.search(rf"\b{h}\(", t) for h in hit)
+        }
+        if not more:
+            return hit
+        hit |= more
+
+
+def test_bootstrap_ci_hashes_seeds_once_per_row(spark, sf_dir):
+    """Both md5 seeds are evaluated once per ORDER row, outside the
+    per-resample expansion loop. A crossJoin with a broadcast 200-row
+    b-table let whole-stage codegen defer the seed projection into the
+    nested-loop join's inner loop, so DigestUtils.md5Hex ran once per
+    (row, b) pair — 200x the hashing the design intends. Checked on the
+    generated Java of each codegen span: no expansion loop (Generate or
+    nested-loop join) may call md5Hex, directly or through a generated
+    helper method."""
+    src = codegen(_QS["agg_bootstrap_ci"].fn(spark, sf_dir))
+    assert src.count("md5Hex(") >= 2, "seed hashing left whole-stage codegen"
+    loop = r"for \(int (?:generate_index|bnlj_arrayIndex)_\d+ = 0;"
+    assert re.search(loop, src), "no resample expansion loop in the codegen"
+    for span in src.split("== Subtree ")[1:]:
+        hashing = _methods_reaching(span, "md5Hex(")
+        for body in _loop_bodies(span, loop):
+            assert "md5Hex(" not in body
+            called = [h for h in hashing if re.search(rf"\b{h}\(", body)]
+            assert not called, called
 
 
 def test_importance_dsir_broadcasts_model_never_reshuffles_corpus(spark, sf_dir):
